@@ -159,12 +159,15 @@ def bpe_learn_merges(
     return merges
 
 
+# bpe_segment_words' lineage cut: one checkpoint per this many merges
+_SEGMENT_CHECKPOINT_EVERY = 64
+
+
 def bpe_segment_words(
     docs: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
     text_col: str = "text",
     replace_passes: int = 6,
-    checkpoint_every: int = 64,
 ) -> DataFrame:
     """Apply learned merges: word → its BPE symbol count (the corpus
     token count under the learned vocab). Segmentation is a pure
@@ -174,7 +177,7 @@ def bpe_segment_words(
     tokenizer vocab always fits).
 
     The merge replay is ``localCheckpoint``-truncated every
-    ``checkpoint_every`` merges: one projection carrying all merges
+    ``_SEGMENT_CHECKPOINT_EVERY`` merges: one projection carrying all merges
     nests ``merges × replace_passes`` replace nodes, which for a real
     vocab (10k-32k merges) overwhelms analysis exactly like the
     learning loop's lineage — the bound keeps plan depth constant at
@@ -193,7 +196,7 @@ def bpe_segment_words(
     )
     for n, (_idx, x, y, _m, _cnt) in enumerate(merges, start=1):
         out = out.select("w", apply_merge(F.col("s"), x, y, replace_passes).alias("s"))
-        if n % checkpoint_every == 0 and n < len(merges):
+        if n % _SEGMENT_CHECKPOINT_EVERY == 0 and n < len(merges):
             out = out.localCheckpoint(eager=True)
     return out.select(
         "w", F.size(F.split(F.trim("s"), " ")).cast("bigint").alias("n_sym")

@@ -460,6 +460,35 @@ def choose_minhash_config(
     return minhash_banding_params(threshold, target_recall, num_hashes=max_hashes)
 
 
+def undirected_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """THE undirected edge list of a pair frame, materialized: ``a, b``
+    holds both orientations of every pair, without self-loops or
+    duplicates — the simple graph every dup-graph operator walks.
+
+    ``pairs`` is read once (one explode of both orientations, not a
+    self-union that would evaluate the caller's pair pipeline — often
+    a whole similarity join — twice) and the result is cut from its
+    lineage with ONE ``caching.flat_checkpoint``: graph operators
+    reference the edge list many times (degrees, both endpoint joins,
+    every iteration), and without the cut each reference re-analyzes
+    and re-runs the pair computation (q138 measured 74 s -> 8.7 s at
+    sf0.1 from this cut alone)."""
+    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
+
+    both = F.explode(
+        F.array(
+            F.struct(F.col(a_col).alias("a"), F.col(b_col).alias("b")),
+            F.struct(F.col(b_col).alias("a"), F.col(a_col).alias("b")),
+        )
+    )
+    return flat_checkpoint(
+        pairs.select(both.alias("__e"))
+        .select("__e.a", "__e.b")
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
 def dedup_components(
     docs: DataFrame,
     pairs: DataFrame,
@@ -509,26 +538,21 @@ def dedup_components(
     may be strings, q246). Identical output to the corpus-wide loop:
     edges with an endpoint missing from ``docs`` were inert before
     (their neighbor-min rows were dropped by the labels join) and stay
-    inert (the ``b``-side semi-join below); everything else is the
-    same min-label/pointer-jump fixpoint.
+    inert (the pairs are semi-joined to ``docs`` on both endpoints
+    before :func:`undirected_edges` materializes them); everything else
+    is the same min-label/pointer-jump fixpoint.
     """
     from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
 
     base = docs.select(F.col(id_col).alias("node"))
-    # materialize the caller's pair pipeline ONCE — the undirected union
-    # below references it twice, and pair generators are whole
-    # similarity joins (q146's phash pass measured ~4 s per evaluation
-    # at sf0.001)
-    p = flat_checkpoint(pairs.select("doc_id_a", "doc_id_b"))
-    edges = flat_checkpoint(
-        p.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
-        .unionByName(
-            p.select(F.col("doc_id_b").alias("a"), F.col("doc_id_a").alias("b"))
-        )
-        .distinct()
-        # drop edges pointing OUTSIDE docs (inert in the old corpus-wide
-        # loop; must stay inert now that endpoints seed the label set)
-        .join(base.withColumnRenamed("node", "b"), "b", "left_semi")
+    # edges with an endpoint outside docs are inert (see above): drop
+    # them before the edge list's one checkpoint, so no round re-runs
+    # the semi-joins
+    edges = undirected_edges(
+        pairs.join(base.withColumnRenamed("node", "doc_id_a"), "doc_id_a", "left_semi")
+        .join(base.withColumnRenamed("node", "doc_id_b"), "doc_id_b", "left_semi"),
+        "doc_id_a",
+        "doc_id_b",
     )
     nodes = edges.select(F.col("a").alias("node")).distinct()
     # self-loops: min over N(v) ∪ {v} ≡ least(own, neighbor-min)
@@ -1324,6 +1348,11 @@ def source_overlap_matrix(
     )
 
 
+# pagerank's in-loop lineage cut: every this-many iterations (SCALE_NOTES
+# "In-loop lineage truncation")
+_PAGERANK_CHECKPOINT_EVERY = 8
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -1331,13 +1360,17 @@ def pagerank(
     iters: int = 5,
     damping: float = 0.85,
     r_digits: int = 9,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Deterministic PageRank over an UNDIRECTED edge list (each edge
     contributes both directions) — duplication-centrality ranking for
     dedup graphs: which documents sit at the center of a near-dup
     cluster (highest-degree-weighted reach), the natural keeper-choice
     refinement over plain min-id.
+
+    Simple-graph contract: the graph is :func:`undirected_edges` of
+    ``edges`` — duplicate and reversed pairs count once and self-loops
+    are dropped (q138 passes distinct ``a < b`` pairs, so nothing
+    collapses there).
 
     Fixed ``iters`` power iterations with per-iteration rounding:
     every contribution ``r/deg`` is rounded to ``r_digits`` and cast
@@ -1348,26 +1381,14 @@ def pagerank(
 
     Returns ``node, degree, rank``. Scale: each iteration is one
     equi-join on the node key + one aggregation — the classic Pregel
-    shape. The in-loop ``ranks`` frame is localCheckpoint'ed every
-    ``checkpoint_every`` iterations (the connected-components lineage
-    discipline): each round's plan nests the previous round's, so
-    without truncation Catalyst re-analyzes an exponentially-growing
+    shape. The edge list and degrees are materialized once; the
+    in-loop ``ranks`` frame is localCheckpoint'ed every
+    ``_PAGERANK_CHECKPOINT_EVERY`` iterations (the connected-components
+    lineage discipline): each round's plan nests the previous round's,
+    so without truncation Catalyst re-analyzes an exponentially-growing
     plan for ``iters`` ≫ 5 (measured: iters=25 is O(iters) with the
     checkpoint, runaway analysis without — SCALE_NOTES)."""
-    und = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    )
-    # every iteration re-references the edge list and degrees, and the
-    # LOGICAL plan would duplicate the upstream edge computation (often
-    # a whole similarity join) once per reference — caching alone does
-    # not stop the optimizer from re-analyzing the exploded plan.
-    # localCheckpoint truncates the lineage (the connected-components
-    # discipline; measured 74 s -> 8.7 s on the q138 shape at sf0.1;
-    # the residual is the 5 small per-iteration shuffles + the edge
-    # computation itself).
-    und = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
+    und = undirected_edges(edges, src_col, dst_col)
     deg = und.groupBy("a").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     ).localCheckpoint()
@@ -1384,7 +1405,7 @@ def pagerank(
         F.round(F.lit(1.0) / F.lit(float(n_nodes)), r_digits).cast(dec).alias("r"),
     )
     for it in range(iters):
-        if checkpoint_every > 0 and it > 0 and it % checkpoint_every == 0:
+        if it and it % _PAGERANK_CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint()
         contrib = (
             und.join(ranks.withColumnRenamed("node", "a"), "a")
@@ -1448,21 +1469,10 @@ def triangle_counts(
     Returns ``node, deg, triangles, clustering`` where clustering =
     round(2·T / (deg·(deg−1)), cc_digits) (0.0 for deg < 2).
     """
-    # the canonical edge list is referenced ~8x downstream (degrees,
-    # orientation, both wedge sides, the closing join) and the caller's
-    # edge computation is often a whole similarity join — truncate the
-    # lineage once or every reference re-runs it (the q138/pagerank
-    # lesson; measured 22 s -> 6 s on the q145 shape at sf0.1).
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # the edge list is referenced ~8x downstream (degrees, orientation,
+    # both wedge sides, the closing join); e = each edge once, a < b
+    und = undirected_edges(edges, src_col, dst_col)
+    e = und.filter(F.col("a") < F.col("b"))
     deg = und.groupBy("a").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     # orient by (deg, id): src = lower-rank endpoint
     da = deg.select(F.col("a"), F.col("deg").alias("__dega"))

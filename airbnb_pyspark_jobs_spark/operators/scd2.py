@@ -132,7 +132,6 @@ def scd2_merge(
     snapshot: DataFrame,
     spec: Scd2Spec,
     as_of: Column | str,
-    persist_intermediates: bool = True,
     deleted_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental SCD2 merge of a new snapshot into an existing dimension.
@@ -141,14 +140,14 @@ def scd2_merge(
     one equi-join partitioning on the natural key feeds change-detection,
     expiry and both anti-joins; no global windows, no mid-plan actions.
 
-    ``persist_intermediates`` caches the deduped snapshot, the current
-    slice and the changed-key set — each feeds 2-3 downstream joins, and
-    without caching the merge re-scans its inputs ~10× (measured).
-    Dimensions are small relative to facts, so MEMORY_AND_DISK caching
-    is the right default even at warehouse scale; pass False to keep the
-    plan fully lazy. Caches are registered with ``caching.owned_persist``
-    (released by the next ``@query`` invocation or an explicit
-    ``caching.release_owned_caches()`` after materialization).
+    The deduped snapshot, the current slice and the changed-key set are
+    always persisted — each feeds 2-3 downstream joins, and without
+    caching the merge re-scans its inputs ~10× (measured). Dimensions
+    are small relative to facts, so MEMORY_AND_DISK caching is right
+    even at warehouse scale. Caches are registered with
+    ``caching.owned_persist`` (released by the next ``@query``
+    invocation or an explicit ``caching.release_owned_caches()`` after
+    materialization).
 
     Deletion semantics (reference parity by default): a natural key
     PRESENT in the dimension but ABSENT from the snapshot keeps its
@@ -161,19 +160,16 @@ def scd2_merge(
     is treated as alive (the snapshot wins; the delete is ignored), so
     ambiguous upsert+delete feeds are safe.
     """
+    from airbnb_pyspark_jobs_spark.caching import owned_persist
+
     validate_scd2_schema(existing, spec)
     as_of_c = F.lit(as_of).cast("timestamp") if isinstance(as_of, str) else as_of
     key = list(spec.natural_key)
 
-    def _p(df: DataFrame) -> DataFrame:
-        from airbnb_pyspark_jobs_spark.caching import owned_persist
-
-        return owned_persist(df) if persist_intermediates else df
-
-    snap = _p(snapshot.select(*spec.all_source_cols).dropDuplicates(key))
+    snap = owned_persist(snapshot.select(*spec.all_source_cols).dropDuplicates(key))
     snap_hashed = snap.withColumn("__row_hash", spec._row_hash())
 
-    current = _p(existing.filter(F.col("is_valid")))
+    current = owned_persist(existing.filter(F.col("is_valid")))
     current_hashed = current.withColumn("__row_hash", spec._row_hash())
 
     # Changed: natural key exists and tracked attributes differ.
@@ -193,7 +189,7 @@ def scd2_merge(
     brand_new = snap.join(current.select(*key), on=key, how="left_anti")
 
     # Expire current versions whose key changed.
-    changed_keys = _p(changed_new.select(*key))
+    changed_keys = owned_persist(changed_new.select(*key))
     expired = (
         current.join(changed_keys, on=key, how="left_semi")
         .withColumn("end_dt", as_of_c)
@@ -203,7 +199,7 @@ def scd2_merge(
     # Tombstones: current versions of deleted keys (minus any key the
     # snapshot still carries — snapshot wins) expire with no replacement.
     if deleted_keys is not None:
-        del_keys = _p(
+        del_keys = owned_persist(
             deleted_keys.select(*key)
             .dropDuplicates(key)
             .join(snap.select(*key), on=key, how="left_anti")

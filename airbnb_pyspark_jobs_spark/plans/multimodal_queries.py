@@ -19,6 +19,7 @@ from airbnb_pyspark_jobs_spark.operators.multimodal import (
     repartition_by_bytes,
 )
 from airbnb_pyspark_jobs_spark.plans.queries import query
+from airbnb_pyspark_jobs_spark.plans.text_queries import _D_REACH
 from airbnb_pyspark_jobs_spark.sources.registry import load_table
 
 _DIMS = 8
@@ -158,11 +159,7 @@ def _q166_oracle() -> str:
       SELECT media_id_a AS a, media_id_b AS b FROM pairs
       UNION SELECT media_id_b, media_id_a FROM pairs
     ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    {_D_REACH},
     comp AS (SELECT src AS media_id, MIN(dst) AS cluster_id
              FROM reach GROUP BY src),
     sz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size

@@ -39,6 +39,49 @@ _D_SHINGLES = rf"""
   )
 """
 
+# The near-dup definition every dup-graph query shares: word 3-gram
+# Jaccard >= 0.5, over shingles held by at most 50 documents (the df²
+# join-fan-out guard). Both engines render it from these two constants.
+_NEAR_DUP_JACCARD = 0.5
+_NEAR_DUP_MAX_DF = 50
+
+
+def _near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs ``doc_id_a < doc_id_b, jaccard`` (q44's ground truth)."""
+    return DD.ngram_jaccard_pairs(
+        docs, threshold=_NEAR_DUP_JACCARD, max_shingle_df=_NEAR_DUP_MAX_DF
+    )
+
+
+# DuckDB twin of _near_dup_pairs over _D_SHINGLES' `sh`: the pairs
+# (`prs`) and their undirected edge list (`edges`, both orientations)
+_D_NEAR_DUP_EDGES = f"""rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {_NEAR_DUP_MAX_DF}),
+shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
+cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
+  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+prs AS (
+  SELECT doc_id_a, doc_id_b FROM inter
+  JOIN cnt ca ON doc_id_a = ca.doc_id
+  JOIN cnt cb ON doc_id_b = cb.doc_id
+  WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= {_NEAR_DUP_JACCARD}
+),
+edges AS (
+  SELECT doc_id_a AS a, doc_id_b AS b FROM prs
+  UNION SELECT doc_id_b, doc_id_a FROM prs
+)"""
+
+# DuckDB transitive closure over `edges` from every document (needs
+# WITH RECURSIVE): MIN(dst) per src is the dedup_components label
+_D_REACH = """reach(src, dst) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
+)"""
+
 
 # ---------------------------------------------------------------------------
 # q40 text stats: token counts (whitespace + BPE-ish), stopword ratio,
@@ -156,12 +199,12 @@ def q41_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q44 exact n-gram Jaccard near-dup pairs (shingle self-join).
-# max_shingle_df=50 caps join fan-out (df² guard) — mirrored in the oracle.
+# q44 exact n-gram Jaccard near-dup pairs (shingle self-join). The
+# _near_dup_pairs definition itself, with its jaccard column.
 # ---------------------------------------------------------------------------
 _Q44_ORACLE = f"""
 WITH {_D_SHINGLES},
-rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
+rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {_NEAR_DUP_MAX_DF}),
 shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
 cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
 inter AS (
@@ -174,15 +217,13 @@ SELECT doc_id_a, doc_id_b,
 FROM inter
 JOIN cnt ca ON doc_id_a = ca.doc_id
 JOIN cnt cb ON doc_id_b = cb.doc_id
-WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
+WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= {_NEAR_DUP_JACCARD}
 """
 
 
 @query("q44_ngram_jaccard_pairs", oracle=_Q44_ORACLE)
 def q44_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.ngram_jaccard_pairs(
-        load_table(spark, "documents", sf_dir), threshold=0.5, max_shingle_df=50
-    )
+    return _near_dup_pairs(load_table(spark, "documents", sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -603,36 +644,15 @@ def q57_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q58_dedup_components",
     oracle=f"""
     WITH RECURSIVE {_D_SHINGLES},
-    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-    shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
-      FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT doc_id_a, doc_id_b FROM inter
-      JOIN cnt ca ON doc_id_a = ca.doc_id
-      JOIN cnt cb ON doc_id_b = cb.doc_id
-      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_id_a AS a, doc_id_b AS b FROM prs
-      UNION SELECT doc_id_b, doc_id_a FROM prs
-    ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    )
+    {_D_NEAR_DUP_EDGES},
+    {_D_REACH}
     SELECT src AS doc_id, MIN(dst) AS component_id
     FROM reach GROUP BY src
     """,
 )
 def q58_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    pairs = _near_dup_pairs(docs)
     return DD.dedup_components(docs, pairs)
 
 
@@ -871,29 +891,8 @@ def q36_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q72_dedup_keep_best",
     oracle=f"""
     WITH RECURSIVE {_D_SHINGLES},
-    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-    shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
-      FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT doc_id_a, doc_id_b FROM inter
-      JOIN cnt ca ON doc_id_a = ca.doc_id
-      JOIN cnt cb ON doc_id_b = cb.doc_id
-      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_id_a AS a, doc_id_b AS b FROM prs
-      UNION SELECT doc_id_b, doc_id_a FROM prs
-    ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    {_D_NEAR_DUP_EDGES},
+    {_D_REACH},
     comp AS (
       SELECT src AS doc_id, MIN(dst) AS component_id FROM reach GROUP BY src
     ),
@@ -915,7 +914,7 @@ def q72_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    pairs = _near_dup_pairs(docs)
     comp = DD.dedup_components(docs, pairs)
     joined = comp.join(docs.select("doc_id", "n_chars"), "doc_id")
     w = Window.partitionBy("component_id").orderBy(
@@ -1051,29 +1050,8 @@ def q76_contamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 _Q78_ORACLE = f"""
 WITH RECURSIVE {_D_SHINGLES},
-rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
-cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
-  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-prs AS (
-  SELECT doc_id_a, doc_id_b FROM inter
-  JOIN cnt ca ON doc_id_a = ca.doc_id
-  JOIN cnt cb ON doc_id_b = cb.doc_id
-  WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
-),
-edges AS (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM prs
-  UNION SELECT doc_id_b, doc_id_a FROM prs
-),
-reach(src, dst) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
+{_D_NEAR_DUP_EDGES},
+{_D_REACH},
 comp AS (SELECT src AS doc_id, MIN(dst) AS component_id FROM reach GROUP BY src)
 SELECT doc_id, component_id,
   CASE WHEN bucket < 8000 THEN 'train'
@@ -1093,7 +1071,7 @@ def q78_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airbnb_pyspark_jobs_spark.operators.sampling import hash_split
 
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    pairs = _near_dup_pairs(docs)
     comp = DD.dedup_components(docs, pairs)
     return hash_split(comp, "component_id", {"train": 0.8, "val": 0.1, "test": 0.1})
 
@@ -2961,10 +2939,7 @@ def q142_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_importance_weights,
         quality_filter,
     )
-    from airbnb_pyspark_jobs_spark.operators.dedupe import (
-        exact_dedup_keepers,
-        ngram_jaccard_pairs,
-    )
+    from airbnb_pyspark_jobs_spark.operators.dedupe import exact_dedup_keepers
 
     docs = load_table(spark, "documents", sf_dir)
     s1 = docs.filter(F.col("lang") == "en").select("doc_id")
@@ -2974,7 +2949,7 @@ def q142_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("keeper_id").alias("doc_id")
     )
     s3 = s2.join(keepers, "doc_id", "left_semi")
-    nd = ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50).select(
+    nd = _near_dup_pairs(docs).select(
         F.col("doc_id_b").alias("doc_id")
     )
     s4 = s3.join(nd, "doc_id", "left_anti")
@@ -3150,29 +3125,8 @@ def q147_quality_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q148_priority_keepers",
     oracle=rf"""
     WITH RECURSIVE {_D_SHINGLES},
-    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-    shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
-      FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT doc_id_a, doc_id_b FROM inter
-      JOIN cnt ca ON doc_id_a = ca.doc_id
-      JOIN cnt cb ON doc_id_b = cb.doc_id
-      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_id_a AS a, doc_id_b AS b FROM prs
-      UNION SELECT doc_id_b, doc_id_a FROM prs
-    ),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    {_D_NEAR_DUP_EDGES},
+    {_D_REACH},
     comp AS (SELECT src AS doc_id, MIN(dst) AS component_id
              FROM reach GROUP BY src),
     pri AS (
@@ -3194,7 +3148,7 @@ def q147_quality_classifier_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q148_priority_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    pairs = _near_dup_pairs(docs)
     comp = DD.dedup_components(docs, pairs)
     pri = docs.select(
         "doc_id",
@@ -5790,24 +5744,7 @@ def q261_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q262_dup_graph_assortativity",
     oracle=f"""
     WITH {_D_SHINGLES},
-    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
-    shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b, COUNT(*) AS i
-      FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT doc_id_a, doc_id_b FROM inter
-      JOIN cnt ca ON doc_id_a = ca.doc_id
-      JOIN cnt cb ON doc_id_b = cb.doc_id
-      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
-    ),
-    edges AS (
-      SELECT doc_id_a AS a, doc_id_b AS b FROM prs
-      UNION SELECT doc_id_b, doc_id_a FROM prs
-    ),
+    {_D_NEAR_DUP_EDGES},
     deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS d
             FROM edges GROUP BY 1),
     ed AS (
@@ -5834,19 +5771,7 @@ def q261_self_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q262_dup_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
-    # the edge list feeds degrees + BOTH endpoint-degree joins + the
-    # node count — without truncation the whole Jaccard pair join was
-    # re-analyzed AND re-executed once per reference (r12 plan audit:
-    # 176 Exchanges before, the pair subtree ~6×; guide §2.4/§5)
-    from airbnb_pyspark_jobs_spark.caching import flat_checkpoint
-
-    edges = flat_checkpoint(
-        pairs.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_id_b").alias("a"), F.col("doc_id_a").alias("b"))
-        )
-    )
+    edges = DD.undirected_edges(_near_dup_pairs(docs), "doc_id_a", "doc_id_b")
     deg = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -5987,7 +5912,7 @@ def _q265_oracle() -> str:
     parts = [
         f"""
     WITH {_D_SHINGLES},
-    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= 50),
+    rare AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) <= {_NEAR_DUP_MAX_DF}),
     shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare ON sh.s = rare.s),
     cnt AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
     inter AS (
@@ -5999,7 +5924,7 @@ def _q265_oracle() -> str:
       SELECT doc_id_a, doc_id_b FROM inter
       JOIN cnt ca ON doc_id_a = ca.doc_id
       JOIN cnt cb ON doc_id_b = cb.doc_id
-      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= 0.5
+      WHERE CAST(i AS DOUBLE) / CAST(ca.n + cb.n - i AS DOUBLE) >= {_NEAR_DUP_JACCARD}
     ),
     e0 AS MATERIALIZED (SELECT doc_id_a AS a, doc_id_b AS b FROM prs)"""
     ]
@@ -6036,7 +5961,7 @@ def _q265_oracle() -> str:
 @query("q265_kcore_peeling", oracle=_q265_oracle())
 def q265_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    pairs = _near_dup_pairs(docs)
     # localCheckpoint, not persist: each peel round references the prior
     # round 3x (degree union + both semi-joins) and the stats rows once
     # more, so an un-truncated lineage re-nests the whole shingle
@@ -6264,9 +6189,7 @@ def q273_transitivity_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airbnb_pyspark_jobs_spark.functions.numeric import decimal_ratio_round
 
     docs = load_table(spark, "documents", sf_dir)
-    pairs = owned_persist(
-        DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
-    )
+    pairs = owned_persist(_near_dup_pairs(docs))
     comp = DD.dedup_components(docs, pairs)
     direct = pairs.agg(F.count(F.lit(1)).cast("bigint").alias("__direct"))
     sizes = (
@@ -6945,7 +6868,7 @@ def q296_cross_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     ds = owned_persist(docs.select("doc_id", "source"))
-    prs = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=50)
+    prs = _near_dup_pairs(docs)
     j = (
         prs.join(
             ds.select(F.col("doc_id").alias("doc_id_a"), F.col("source").alias("__sa")),

@@ -2,8 +2,9 @@
 
 SURVEY.md §2.11's hand-maintained addendum table drifted as the
 registry grew (VERDICT r6 #7); this catalog is derived FROM the
-registry itself — name, families, oracle status, source anchor and a
-one-line semantics summary (the query function's docstring first line,
+registry itself — name, families, oracle status, source anchor
+(``module:function``, so an edit in one query does not shift every
+other row) and a one-line semantics summary (the query function's docstring first line,
 else the first line of the nearest ``# ---`` banner comment above its
 definition). ``tests/test_registry_catalog.py`` regenerates and diffs,
 so a stale checked-in catalog fails CI.
@@ -63,7 +64,6 @@ def build() -> str:
     for name in sorted(QUERIES):
         fn = getattr(QUERIES[name], "__wrapped__", QUERIES[name])
         code = fn.__code__
-        rel = os.path.relpath(code.co_filename, REPO)
         doc = (fn.__doc__ or "").strip().splitlines()
         summary = doc[0].strip() if doc else ""
         if not summary:
@@ -71,7 +71,7 @@ def build() -> str:
         fams = ", ".join(sorted(QUERY_FAMILIES.get(name, set())))
         oracle = "oracle" if name in ORACLES else "rows-only"
         rows.append(
-            f"| {name} | {fams} | {oracle} | `{rel}:{code.co_firstlineno}` "
+            f"| {name} | {fams} | {oracle} | `{fn.__module__}:{fn.__qualname__}` "
             f"| {summary.replace('|', '/')} |"
         )
     return (

@@ -1,10 +1,11 @@
 """Hypothesis property tests for the session's invariant-heavy
-operators: bloom semi-join exactness and CDC chunk reassembly must
-hold for ARBITRARY inputs, not just the corpus shapes."""
+operators: bloom semi-join exactness, CDC chunk reassembly and the
+near-dup graph's edge list and components must hold for ARBITRARY
+inputs, not just the corpus shapes."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from airbnb_pyspark_jobs_spark.operators.bloom import bloom_semi_join
@@ -171,3 +172,53 @@ def test_vocabulary_tree_digest_is_order_and_partition_invariant(
     assert len(out) == 1
     assert out[0].df == len(doc_ids)
     assert out[0].postings_md5 == _tree_postings_digest(doc_ids, buckets=buckets)
+
+
+_GRAPH_IDS = [f"d{i}" for i in range(8)]
+_graph_id = st.sampled_from(_GRAPH_IDS)
+
+
+def _py_components(doc_ids, pairs):
+    """Union-find over the pairs whose two endpoints are both in
+    ``doc_ids``; every doc maps to the smallest id in its component."""
+    parent = {d: d for d in doc_ids}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {d: find(d) for d in doc_ids}
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    doc_ids=st.sets(_graph_id, min_size=1, max_size=6),
+    pairs=st.lists(st.tuples(_graph_id, _graph_id), max_size=12),
+)
+# always exercised: a self-loop, a duplicate and a reversed pair, and a
+# chain d3~d0~d5 through d0, which is absent from docs
+@example(
+    doc_ids={"d3", "d5", "d6", "d7"},
+    pairs=[("d6", "d6"), ("d7", "d6"), ("d6", "d7"), ("d7", "d6"),
+           ("d3", "d0"), ("d0", "d5"), ("d5", "d1")],
+)
+def test_dup_graph_edges_and_components_match_python(spark, doc_ids, pairs):
+    """``undirected_edges`` is the set of both orientations minus
+    self-loops; ``dedup_components`` is union-find over the edges whose
+    endpoints are both in ``docs`` (foreign endpoints are inert)."""
+    from airbnb_pyspark_jobs_spark.operators.dedupe import (
+        dedup_components,
+        undirected_edges,
+    )
+
+    pdf = spark.createDataFrame(pairs, "doc_id_a string, doc_id_b string")
+    docs = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+    edges = {(r.a, r.b) for r in undirected_edges(pdf, "doc_id_a", "doc_id_b").collect()}
+    assert edges == {e for a, b in pairs for e in ((a, b), (b, a)) if a != b}
+    comp = {r.doc_id: r.component_id for r in dedup_components(docs, pdf).collect()}
+    assert comp == _py_components(doc_ids, pairs)
